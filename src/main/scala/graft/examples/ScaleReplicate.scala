@@ -312,22 +312,10 @@ object ScaleReplicate {
     // the custkey stride from CUSTOMER, so foreign keys stay aligned
     // replica-by-replica. Read lazily — only when a relational table
     // is requested.
-    // SPARK_GRAFT_REPLICATE_STRIDE_MULT (default 1): multiply the key
-    // strides. The sf0.1 base's o_orderkey tops out at 150k, so ×10⁴
-    // replication reaches only ~1.5e9 — SHORT of the 2⁶³/2654435761 ≈
-    // 3.47e9 overflow line the decade pins were overflow-proofed for.
-    // A sparser key space (mult ≥ 4) pushes real keys past the line
-    // while keeping replicas disjoint; no query assumes key density.
-    // CAVEAT: tables replicated with different mults are NOT mutually
-    // join-consistent — use one mult per fixture build, or only on
-    // single-table query families (the sf1000 GLM stage).
-    val strideMult = sys.env.get("SPARK_GRAFT_REPLICATE_STRIDE_MULT")
-      .map(_.toLong).getOrElse(1L)
-    require(strideMult >= 1, s"stride mult must be >= 1, got $strideMult")
-    lazy val orderStride = (spark.read.parquet(s"$src/orders.parquet")
-      .agg(max("o_orderkey")).head().getLong(0) + 1L) * strideMult
-    lazy val custStride = (spark.read.parquet(s"$src/customer.parquet")
-      .agg(max("c_custkey")).head().getLong(0) + 1L) * strideMult
+    lazy val orderStride = spark.read.parquet(s"$src/orders.parquet")
+      .agg(max("o_orderkey")).head().getLong(0) + 1L
+    lazy val custStride = spark.read.parquet(s"$src/customer.parquet")
+      .agg(max("c_custkey")).head().getLong(0) + 1L
 
     if (tables("lineitem")) {
       // SPARK_GRAFT_REPLICATE_LINEITEM_COLS (comma list): build the

@@ -255,10 +255,12 @@ object Dedup {
     * string. Wider bands keep the string form (31·rowsPerBand bits no
     * longer fit a long). The short-doc sentinel signature (all
     * components Long.MaxValue; reaches this only on the STREAMING path
-    * — batch [[banded]] filters sentinel rows) packs to -1 (MaxValue <<
-    * 31 has its low 31 bits clear, so the OR is all-ones); real keys
-    * are non-negative, so a sentinel can never collide with a reference
-    * key and short stream docs still pass every anti-join as clean.
+    * — batch [[banded]] filters sentinel rows) can never collide with a
+    * reference key, so short stream docs pass every anti-join as clean:
+    *  - 2-component bands pack it to -1 (MaxValue << 31 has its low 31
+    *    bits clear, so the OR is all-ones); real keys are non-negative.
+    *  - 1-component bands key on the component itself, so the sentinel
+    *    key is Long.MaxValue; real components are ≤ 2³¹−2.
     *
     * ONE definition shared by the batch banding — and therefore by
     * [[writeBandedSignatures]]'s on-disk `bucket` column — and the
@@ -1268,9 +1270,10 @@ object Dedup {
       // cells, norm) projection, and let every consumer read it:
       // element_at(cells, 1) IS the primary cell (ivfCells shares
       // ivfCell's round-before-argmin and lowest-cell-id tie rules —
-      // HierIvfSpec pins the identity), so the pair set is
-      // bit-identical to the re-derived form. The norm rides along so
-      // the fan side no longer recomputes it per exploded probe row.
+      // FunctionsSpec's ivfCells distance-tie test pins the identity),
+      // so the pair set is bit-identical to the re-derived form. The
+      // norm rides along so the fan side no longer recomputes it per
+      // exploded probe row.
       val base = emb.select(col(idCol).as("__id"), vec.as("__v"),
           graft.ops.Similarity.ivfCells(vec, centroids, nprobe, roundDp)
             .as("__cells"))

@@ -330,16 +330,6 @@ object Solvers {
     * so the pack amortizes to a branch-free dense loop), and the same
     * rows-fit-in-a-chunk assumption the reference's dask chunks make.
     */
-  /** Opt-in ADMM run diagnostics (VERDICT r14 #7): consensus iterations
-    * actually run and total local L-BFGS objective evaluations across
-    * all chunks and iterations (counted with a Spark accumulator —
-    * at-least-once under task retries, exact on a healthy run). Zero
-    * cost unless passed. */
-  final class AdmmDiag {
-    var iterations: Int = 0
-    var localEvals: Long = 0L
-  }
-
   def admm(
       data: GlmData,
       regularizer: Regularizer = Regularizer.get("l1"),
@@ -351,8 +341,7 @@ object Solvers {
       reltol: Double = 1e-2,
       family: Family = Logistic,
       normalize: Boolean = true,
-      warmStart: Boolean = false,
-      diag: AdmmDiag = null): DenseVector[Double] =
+      warmStart: Boolean = false): DenseVector[Double] =
     Normalize(data, normalize) { d =>
       val p = d.numFeatures
       val nchunks = math.max(d.numPartitions, 1)
@@ -367,11 +356,8 @@ object Solvers {
 
       var k = 0
       var done = false
-      val evalAcc =
-        if (diag == null) null
-        else d.rows.sparkContext.longAccumulator("admmLocalEvals")
       while (k < maxIter && !done) {
-        val newBetas = localSolves(d, betas, z, u, rho, family, evalAcc)
+        val newBetas = localSolves(d, betas, z, u, rho, family)
         if (warmStart) betas = newBetas
 
         val betaHat = newBetas.map(b => b * overRelax + z * (1.0 - overRelax))
@@ -400,10 +386,6 @@ object Solvers {
         if (primalRes < epsPri && dualRes < epsDual) done = true
         k += 1
       }
-      if (diag != null) {
-        diag.iterations = k
-        diag.localEvals = evalAcc.value
-      }
       z
     }
 
@@ -418,9 +400,7 @@ object Solvers {
       z: DenseVector[Double],
       u: Array[DenseVector[Double]],
       rho: Double,
-      family: Family,
-      evalAcc: org.apache.spark.util.LongAccumulator = null):
-      Array[DenseVector[Double]] = {
+      family: Family): Array[DenseVector[Double]] = {
     val p = d.numFeatures
     // per-chunk state rides a per-iteration TORRENT BROADCAST, not the
     // task closure: each task reads only its own index, but a closure
@@ -480,7 +460,6 @@ object Solvers {
         val init = DenseVector(bcState.value._1(idx).clone())
         val diff = new DiffFunction[DenseVector[Double]] {
           def calculate(beta: DenseVector[Double]): (Double, DenseVector[Double]) = {
-            if (evalAcc != null) evalAcc.add(1L)
             val b = beta.toArray
             var loss = 0.0
             val g = new Array[Double](p)

@@ -290,6 +290,16 @@ class FunctionsSpec extends AnyFunSuite {
           .take(nprobe).map(_._2).toList
       }
       assert(got.toList == expected.toList, s"nprobe=$nprobe")
+      // the first-ranked cell IS ivfCell's argmin (same rounding and tie
+      // rule) — the multi-probe semDedup reads its primary cell this way
+      val heads = df.select(
+        element_at(graft.ops.Similarity.ivfCells(col("v"), cents, nprobe,
+          roundDp = 6), 1).as("head"),
+        graft.ops.Similarity.ivfCell(col("v"), cents, roundDp = 6).as("cell"))
+        .collect().map(r => (r.getInt(0), r.getInt(1)))
+      assert(heads.forall { case (h, c) => h == c },
+        s"nprobe=$nprobe: element_at(ivfCells, 1) != ivfCell: " +
+          heads.filter { case (h, c) => h != c }.mkString(", "))
     }
   }
 

@@ -3,16 +3,16 @@ package graft
 import graft.ops.Similarity
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Seed-determinism pins for the PCA / OPQ / PQ trainers (VERDICT r15
-  * #1): r15 fixed the IVF trainer's treeAggregate task-completion-order
+/** Seed-determinism pins for the IVF / PCA / OPQ / PQ trainers (VERDICT
+  * r15 #1): r15 fixed the IVF trainer's treeAggregate task-completion-order
   * merge (float addition is non-associative, so same-seed trainings
   * drifted in the last ulp) and flagged the three sibling trainers as
   * known-latent carriers of the same gap. This round ported
   * `trainPcaProjection` and the OPQ `correlation` pass to
   * `Kernels.orderedRddAggregate` (partition-index-ordered combines);
   * `trainPqCodebooks` had already inherited the fix transitively
-  * through `trainIvfCentroids`. These pins are HierIvfSpec-style:
-  * 5 consecutive same-seed runs, bit-compared.
+  * through `trainIvfCentroids`, which is pinned here directly too. Each
+  * pin is 5 consecutive same-seed runs, bit-compared.
   *
   * The fixtures are deliberately hostile to un-ordered folds: multiple
   * partitions under local[4] (so task completion order genuinely
@@ -39,6 +39,19 @@ class TrainerDeterminismSpec extends AnyFunSuite {
   }
 
   private val Runs = 5
+
+  test("trainIvfCentroids: 5 consecutive same-seed runs are bit-identical") {
+    val df = hostile(n = 2000, d = 8, parts = 13, seed = 29L)
+    df.persist(); df.count()
+    val runs = (1 to Runs).map(_ =>
+      Similarity.trainIvfCentroids(df, "embedding", kCells = 16, iters = 3,
+          seed = 3L)
+        .flatten.toSeq)
+    df.unpersist()
+    assert(runs.distinct.size == 1,
+      s"IVF centroids drifted across $Runs same-seed runs — the Lloyd " +
+        "update must fold its partials in partition-index order")
+  }
 
   test("trainPcaProjection: 5 consecutive same-seed runs are bit-identical") {
     val df = hostile(n = 2000, d = 8, parts = 13, seed = 31L)

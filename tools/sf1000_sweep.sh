@@ -28,7 +28,7 @@ SF=tmp/sf1000
 OUT=tmp/verify_sf1000
 SLOW=tmp/verify_sf1000_slow
 # SF1000_ROUND: artifact round dir (r15 recorded the original sweep;
-# later rounds merge their drip rows into their own copy)
+# a later round can merge its re-swept rows into its own copy)
 ART="docs/artifacts/r${SF1000_ROUND:-15}"
 mkdir -p "$OUT" "$SLOW" "$ART"
 SLOW_PID_FILE=tmp/sf1000_slow_lane.pid
